@@ -296,23 +296,17 @@ object DedupOps {
   /** Publishes (or freshness-checks) the minhash signature index for
     * `dir`; returns its location. Idempotent per corpus fingerprint. */
   private[graft] def minhashPublish(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
     val idxDir = minhashIdxDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(idxDir, "_GRAFT_TAG")
-    Etl.withPathLock(Paths.get(idxDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        // LAZY: the two segment writes are sequential full-
-        // materializing actions — the first computes and caches every
-        // partition, the second reads the cache (r14)
-        val sigs = minhashSignatures(dupDocs(s, dir))
-          .localCheckpoint(eager = false)
-        sigs.select("doc_id", "sh").write.mode("overwrite")
-          .parquet(s"$idxDir/sets")
-        bandBuckets(sigs).write.mode("overwrite")
-          .parquet(s"$idxDir/buckets")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(idxDir, ScaleJoins.corpusTag(dir, Seq("documents"))) { tmp =>
+      // LAZY: the two segment writes are sequential full-
+      // materializing actions — the first computes and caches every
+      // partition, the second reads the cache (r14)
+      val sigs = minhashSignatures(dupDocs(s, dir))
+        .localCheckpoint(eager = false)
+      sigs.select("doc_id", "sh").write.mode("overwrite")
+        .parquet(s"$tmp/sets")
+      bandBuckets(sigs).write.mode("overwrite")
+        .parquet(s"$tmp/buckets")
     }
     idxDir
   }
@@ -523,29 +517,23 @@ object DedupOps {
     * hamming verify all read the published bytes, so the DuckDB
     * oracle recomputes them with its own bit_count(xor) ([T]→[O] r8). */
   def dedupSimhash(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val idxDir = simhashIdxDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(idxDir, "_GRAFT_TAG")
-    Etl.withPathLock(Paths.get(idxDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        // no checkpoint (r14): sigs has exactly ONE consumer (the
-        // bucket-segment write) — the pin bought a whole extra job
-        // for lineage nobody re-read
-        val sigs = simhashSigs(dupDocs(s, dir))
-        // sig rides each band row (8 bytes × 4 bands): the candidate
-        // self-join then verifies hamming IN PLACE — no per-side sig
-        // re-join, the same one-join shape the in-flight path uses
-        sigs.select(col("doc_id"), col("sig"),
-            explode(array((0 until 4).map { b =>
-              struct(lit(b).as("band"),
-                shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)
-                  .as("bucket"))
-            }: _*)).as("bb"))
-          .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.bucket"))
-          .write.mode("overwrite").parquet(s"$idxDir/buckets")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(idxDir, ScaleJoins.corpusTag(dir, Seq("documents"))) { tmp =>
+      // no checkpoint (r14): sigs has exactly ONE consumer (the
+      // bucket-segment write) — the pin bought a whole extra job
+      // for lineage nobody re-read
+      val sigs = simhashSigs(dupDocs(s, dir))
+      // sig rides each band row (8 bytes × 4 bands): the candidate
+      // self-join then verifies hamming IN PLACE — no per-side sig
+      // re-join, the same one-join shape the in-flight path uses
+      sigs.select(col("doc_id"), col("sig"),
+          explode(array((0 until 4).map { b =>
+            struct(lit(b).as("band"),
+              shiftright(col("sig"), b * 16).bitwiseAND(0xFFFFL)
+                .as("bucket"))
+          }: _*)).as("bb"))
+        .select(col("doc_id"), col("sig"), col("bb.band"), col("bb.bucket"))
+        .write.mode("overwrite").parquet(s"$tmp/buckets")
     }
     // corpus-sized band frame: never broadcast (see jaccardPairs)
     val banded = s.read.parquet(s"$idxDir/buckets").hint("shuffle_hash")
@@ -737,17 +725,11 @@ object DedupOps {
     * independently (recursive CTE), so the published labels are
     * verified, not trusted. */
   def publishedLabels(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = labelsDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val docs = dupDocs(s, dir)
-        clusterLabels(docs, jaccardPairs(docs, jaccardTau))
-          .write.mode("overwrite").parquet(root)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(root, ScaleJoins.corpusTag(dir, Seq("documents"))) { tmp =>
+      val docs = dupDocs(s, dir)
+      clusterLabels(docs, jaccardPairs(docs, jaccardTau))
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(root)
   }
@@ -895,10 +877,7 @@ object DedupOps {
     * under a shifted id (dupDocs' planted clones) — a nightly crawl
     * whose re-fetched pages must match their corpus originals. */
   def dedupIncremental(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val idxDir = dedupIndexDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(idxDir, "_GRAFT_TAG")
     // per-run work: hash ONLY the batch; publish its segment (the
     // oracle reads it, and in production tonight's segment compacts
     // into tomorrow's corpus index)
@@ -910,22 +889,20 @@ object DedupOps {
     // write materializes and caches, later consumers read the cache
     val batchSigs = minhashSignatures(batch).localCheckpoint(eager = false)
     val batchBanded = bandBuckets(batchSigs).localCheckpoint(eager = false)
-    // ALL segment writes run under the lock: the batch segment is
-    // overwrite-mode on every run, and a concurrent JVM (or the
-    // oracle) reading those globs mid-overwrite would hit deleted
-    // files — the same overlapping-Bench-and-Verify race the corpus
-    // build guards against
-    Etl.withPathLock(Paths.get(idxDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val corpusSigs =
-          minhashSignatures(Tables.load(s, dir, "documents"))
-            .localCheckpoint(eager = false) // sequential writes, as above
-        corpusSigs.select("doc_id", "sh").write.mode("overwrite")
-          .parquet(s"$idxDir/corpus_sets")
-        bandBuckets(corpusSigs).write.mode("overwrite")
-          .parquet(s"$idxDir/corpus_buckets")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(idxDir, ScaleJoins.corpusTag(dir, Seq("documents"))) { tmp =>
+      val corpusSigs =
+        minhashSignatures(Tables.load(s, dir, "documents"))
+          .localCheckpoint(eager = false) // sequential writes, as above
+      corpusSigs.select("doc_id", "sh").write.mode("overwrite")
+        .parquet(s"$tmp/corpus_sets")
+      bandBuckets(corpusSigs).write.mode("overwrite")
+        .parquet(s"$tmp/corpus_buckets")
+    }
+    // the batch segment is overwrite-mode on every run, so its writes
+    // take the artifact's lock: a concurrent JVM reading those globs
+    // mid-overwrite would hit deleted files — the same
+    // overlapping-Bench-and-Verify race the corpus build guards against
+    graft.Publish.locked(idxDir) {
       batchSigs.select("doc_id", "sh").write.mode("overwrite")
         .parquet(s"$idxDir/batch_sets")
       batchBanded.write.mode("overwrite")

@@ -406,9 +406,6 @@ object Etl {
        |FROM f ORDER BY 1""".stripMargin
   }
 
-  private val orcByCorpus =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
   /** ORC round-trip of the customer dim — the second columnar
     * interchange format beside parquet (warehouses that standardized
     * on Hive/Trino hand over ORC): write once per corpus, then
@@ -418,20 +415,14 @@ object Etl {
     * with the oracle reading the original parquet. */
   def etlOrcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val cust = Tables.load(s, dir, "customer")
-    val path = orcByCorpus.computeIfAbsent(
-      ScaleJoins.corpusTag(dir, Seq("customer")), { tag =>
-        val p = s"/tmp/graft_orc_$tag"
-        cust.write.mode("overwrite").orc(p)
-        p
-      })
+    val tag = ScaleJoins.corpusTag(dir, Seq("customer"))
+    val path = s"/tmp/graft_orc_$tag"
+    graft.Publish.once(path, tag)(cust.write.mode("overwrite").orc(_))
     s.read.orc(path).select(cust.columns.map(col): _*)
   }
 
   val etlOrcRoundtripSql: String =
     "SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment FROM customer"
-
-  private val jsonlByCorpus =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** JSONL round-trip of the documents corpus — THE interchange
     * format of LLM training data (every public corpus ships as
@@ -443,12 +434,9 @@ object Etl {
   def pipelineJsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val docs = Tables.load(s, dir, "documents")
       .select("doc_id", "lang", "source", "text")
-    val path = jsonlByCorpus.computeIfAbsent(
-      ScaleJoins.corpusTag(dir, Seq("documents")), { tag =>
-        val p = s"/tmp/graft_jsonl_$tag"
-        docs.write.mode("overwrite").json(p)
-        p
-      })
+    val tag = ScaleJoins.corpusTag(dir, Seq("documents"))
+    val path = s"/tmp/graft_jsonl_$tag"
+    graft.Publish.once(path, tag)(docs.write.mode("overwrite").json(_))
     s.read.schema(docs.schema).json(path)
       .select(docs.columns.map(col): _*)
   }
@@ -472,10 +460,10 @@ object Etl {
           reference = Some(Reference("nation", "n_nationkey")))))))
 
   /** The dump location the static oracle SQL reads: keyed by the same
-    * dir-hash tag Verify substitutes for __SFTAG__. A `_GRAFT_TAG`
-    * marker carrying the corpus CONTENT fingerprint guards staleness —
-    * a regenerated fixture at the same path re-runs the migration
-    * instead of letting the oracle read a stale dump. */
+    * dir-hash tag Verify substitutes for __SFTAG__. The publish tag is
+    * the corpus CONTENT fingerprint, so a regenerated fixture at the
+    * same path re-runs the migration instead of letting the oracle
+    * read a stale dump. */
   private[graft] def pipelineDumpDir(dir: String): String =
     s"/tmp/graft_pipeline_dump_${graft.Tables.sfTag(dir)}"
 
@@ -492,34 +480,15 @@ object Etl {
     * node rules cast double -> decimal(18,2) before rendering — raw
     * doubles would be bounded by PyFloatRepr's Python-2 12-significant-
     * digit str(), which is the reference's own lossy contract.) */
-  /** Cross-process exclusive section for one-time layout builds: two
-    * JVMs running the same key on the same corpus (an overlapping
-    * Bench and Verify) must not both observe a stale tag and race
-    * overwrite-mode writes into one directory — one of them could
-    * stamp a valid tag over a dump the other is mid-rewrite on. An OS
-    * FileLock on a sibling lock file serializes check-then-build. */
-  private[graft] def withPathLock[A](lockFile: java.nio.file.Path)(body: => A): A = {
-    import java.nio.file.StandardOpenOption.{CREATE, WRITE}
-    val ch = java.nio.channels.FileChannel.open(lockFile, CREATE, WRITE)
-    val lk = ch.lock()
-    try body finally { lk.release(); ch.close() }
-  }
-
   def etlPipelineDump(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val outDir = pipelineDumpDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("customer", "nation"))
-    val tagPath = Paths.get(outDir, "_GRAFT_TAG")
-    withPathLock(Paths.get(outDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val res = graft.Pipeline.migrate(s, dir, outDir,
-          Seq("customer", "nation"), pipelineDumpChanges,
-          pks = Map("customer" -> Seq("c_custkey"),
-            "nation" -> Seq("n_nationkey")))
-        require(res.tables.map(_.outputName).toSet == Set("clients", "nation"),
-          s"unexpected migration outputs: ${res.tables}")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(pipelineDumpDir(dir),
+        ScaleJoins.corpusTag(dir, Seq("customer", "nation"))) { tmp =>
+      val res = graft.Pipeline.migrate(s, dir, tmp,
+        Seq("customer", "nation"), pipelineDumpChanges,
+        pks = Map("customer" -> Seq("c_custkey"),
+          "nation" -> Seq("n_nationkey")))
+      require(res.tables.map(_.outputName).toSet == Set("clients", "nation"),
+        s"unexpected migration outputs: ${res.tables}")
     }
     // the exact frame migrate rendered; decimal -> double only for the
     // compare harness (decimal cells hash as Decimal objects on the
@@ -805,19 +774,13 @@ object Etl {
     * corpus) hash-matches. A group whose count reaches 0 drops from
     * the view, exactly as GROUP BY would. */
   def etlIncrementalAgg(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val layout = baseAggDir(dir)
-    val tagPath = Paths.get(layout, "_GRAFT_TAG")
-    val tag = ScaleJoins.corpusTag(dir, Seq("customer"))
-    withPathLock(Paths.get(layout + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "customer")
-          .groupBy("c_mktsegment")
-          .agg(count(lit(1)).as("n_customers"),
-            sum(col("c_acctbal").cast(DecimalType(18, 2))).as("sum_bal"))
-          .write.mode("overwrite").parquet(layout)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(layout, ScaleJoins.corpusTag(dir, Seq("customer"))) { tmp =>
+      Tables.load(s, dir, "customer")
+        .groupBy("c_mktsegment")
+        .agg(count(lit(1)).as("n_customers"),
+          sum(col("c_acctbal").cast(DecimalType(18, 2))).as("sum_bal"))
+        .write.mode("overwrite").parquet(tmp)
     }
     val base = Tables.load(s, dir, "customer")
     def dec(c: Column) = c.cast(DecimalType(18, 2))
@@ -885,18 +848,12 @@ object Etl {
       .sortWithinPartitions("o_orderdate", "o_orderkey")
 
   def etlShardExport(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val outDir = shardExportDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    val tagPath = Paths.get(outDir, "_GRAFT_TAG")
-    withPathLock(Paths.get(outDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        shardExportFrame(s, dir)
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", 2000)
-          .parquet(outDir)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(outDir, ScaleJoins.corpusTag(dir, Seq("orders"))) { tmp =>
+      shardExportFrame(s, dir)
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 2000)
+        .parquet(tmp)
     }
     // the oracle-checked result is the re-read shards: any loss,
     // duplication or value corruption in the export breaks parity
@@ -925,23 +882,17 @@ object Etl {
     * bug (lost rows, wrong filter) and a merge bug (misaligned
     * columns, wrong null fill) both break parity. */
   def etlSchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = schemaEvoDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val ord = Tables.load(s, dir, "orders")
-        ord.filter(year(col("o_orderdate")) < 1995)
-          .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
-          .write.mode("overwrite").parquet(s"$root/b1")
-        ord.filter(year(col("o_orderdate")) >= 1995)
-          .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
-            col("o_orderdate"),
-            substring(col("o_orderpriority"), 1, 1).as("o_prio_class"))
-          .write.mode("overwrite").parquet(s"$root/b2")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(root, ScaleJoins.corpusTag(dir, Seq("orders"))) { tmp =>
+      val ord = Tables.load(s, dir, "orders")
+      ord.filter(year(col("o_orderdate")) < 1995)
+        .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate")
+        .write.mode("overwrite").parquet(s"$tmp/b1")
+      ord.filter(year(col("o_orderdate")) >= 1995)
+        .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
+          col("o_orderdate"),
+          substring(col("o_orderpriority"), 1, 1).as("o_prio_class"))
+        .write.mode("overwrite").parquet(s"$tmp/b2")
     }
     s.read.option("mergeSchema", "true").parquet(s"$root/b1", s"$root/b2")
       .select("o_orderkey", "o_custkey", "o_totalprice", "o_orderdate",
@@ -975,20 +926,14 @@ object Etl {
     * so any row lost or duplicated by either rewrite breaks parity.
     * EtlSpec proves the file count actually collapsed. */
   def etlCompact(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = compactDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "orders")
-          .repartition(64)
-          .write.mode("overwrite").parquet(s"$root/frag")
-        s.read.parquet(s"$root/frag")
-          .coalesce(2)
-          .write.mode("overwrite").parquet(s"$root/compact")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(root, ScaleJoins.corpusTag(dir, Seq("orders"))) { tmp =>
+      Tables.load(s, dir, "orders")
+        .repartition(64)
+        .write.mode("overwrite").parquet(s"$tmp/frag")
+      s.read.parquet(s"$tmp/frag")
+        .coalesce(2)
+        .write.mode("overwrite").parquet(s"$tmp/compact")
     }
     s.read.parquet(s"$root/compact").orderBy("o_orderkey")
   }
@@ -1114,23 +1059,17 @@ object Etl {
     * The oracle is plain SQL over the raw table — two eras, one
     * answer, layout invisible. */
   def etlPartitionEvolution(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = partEvoDir(dir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val base = Tables.load(s, dir, "orders")
-          .withColumn("o_year", year(col("o_orderdate")))
-          .withColumn("o_month", month(col("o_orderdate")))
-        base.filter(col("o_year") <= 1997)
-          .write.mode("overwrite").partitionBy("o_year")
-          .parquet(s"$root/era_year")
-        base.filter(col("o_year") >= 1998)
-          .write.mode("overwrite").partitionBy("o_year", "o_month")
-          .parquet(s"$root/era_month")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(root, ScaleJoins.corpusTag(dir, Seq("orders"))) { tmp =>
+      val base = Tables.load(s, dir, "orders")
+        .withColumn("o_year", year(col("o_orderdate")))
+        .withColumn("o_month", month(col("o_orderdate")))
+      base.filter(col("o_year") <= 1997)
+        .write.mode("overwrite").partitionBy("o_year")
+        .parquet(s"$tmp/era_year")
+      base.filter(col("o_year") >= 1998)
+        .write.mode("overwrite").partitionBy("o_year", "o_month")
+        .parquet(s"$tmp/era_month")
     }
     val uni = s.read.parquet(s"$root/era_year")
       .unionByName(s.read.parquet(s"$root/era_month"))
@@ -1170,22 +1109,16 @@ object Etl {
     * round-trip (to_json → corrupt-aware from_json) on the price
     * sums of surviving rows. */
   def etlBadRecords(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = badRecordsDir(dir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"),
-            to_json(struct(col("o_orderkey"), col("o_orderstatus"),
-              col("o_totalprice"))).as("line"))
-          .select(when(col("o_orderkey") % 13 === 0,
-              expr("substring(line, 1, length(line) - 1)"))
-            .otherwise(col("line")).as("value"))
-          .write.mode("overwrite").text(s"$root/jsonl")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(root, ScaleJoins.corpusTag(dir, Seq("orders"))) { tmp =>
+      Tables.load(s, dir, "orders")
+        .select(col("o_orderkey"),
+          to_json(struct(col("o_orderkey"), col("o_orderstatus"),
+            col("o_totalprice"))).as("line"))
+        .select(when(col("o_orderkey") % 13 === 0,
+            expr("substring(line, 1, length(line) - 1)"))
+          .otherwise(col("line")).as("value"))
+        .write.mode("overwrite").text(s"$tmp/jsonl")
     }
     val parsed = s.read
       .schema("o_orderkey LONG, o_orderstatus STRING, " +
@@ -1248,25 +1181,25 @@ object Etl {
     * table. EtlSpec proves the manifest actually prunes (selected
     * files a strict subset) and that pruning loses no rows. */
   def etlManifestPrune(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = manifestRoot(dir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    val tag = ScaleJoins.corpusTag(dir, Seq("orders"))
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "orders")
-          .repartitionByRange(16, col("o_orderkey"))
-          .sortWithinPartitions("o_orderkey")
-          .write.mode("overwrite").parquet(s"$root/data")
-        s.read.parquet(s"$root/data")
-          .groupBy(input_file_name().as("file"))
-          .agg(min(col("o_orderkey")).as("key_min"),
-            max(col("o_orderkey")).as("key_max"),
-            count(lit(1)).as("n_rows"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$root/manifest")
-        Files.writeString(tagPath, tag)
-      }
+    // layout suffix: manifests published with absolute file paths
+    // must be rebuilt (the DIR name stays keyed on corpus identity)
+    val tag = ScaleJoins.corpusTag(dir, Seq("orders")) + "|layout=rel1"
+    graft.Publish.once(root, tag) { tmp =>
+      Tables.load(s, dir, "orders")
+        .repartitionByRange(16, col("o_orderkey"))
+        .sortWithinPartitions("o_orderkey")
+        .write.mode("overwrite").parquet(s"$tmp/data")
+      // file names RELATIVE to data/: the build runs under a temp
+      // root that is renamed on publish, so an absolute path would
+      // point at the temp root
+      s.read.parquet(s"$tmp/data")
+        .groupBy(substring_index(input_file_name(), "/", -1).as("file"))
+        .agg(min(col("o_orderkey")).as("key_min"),
+          max(col("o_orderkey")).as("key_max"),
+          count(lit(1)).as("n_rows"))
+        .coalesce(1)
+        .write.mode("overwrite").parquet(s"$tmp/manifest")
     }
     s.read.parquet(manifestSelectedFiles(s, root): _*)
       .filter(col("o_orderkey").between(manifestLo, manifestHi))
@@ -1283,7 +1216,7 @@ object Etl {
       s: SparkSession, root: String): Seq[String] =
     s.read.parquet(s"$root/manifest")
       .filter(col("key_min") <= manifestHi && col("key_max") >= manifestLo)
-      .select("file").collect().map(_.getString(0)).toSeq
+      .select("file").collect().map(r => s"$root/data/${r.getString(0)}").toSeq
 
   val etlManifestPruneSql: String =
     """SELECT o_orderstatus, COUNT(*) AS n,
@@ -1711,20 +1644,14 @@ object Etl {
     * still rebuilds components independently, so the artifact is
     * verified, never trusted. */
   def publishedPartLabels(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val root = partLabelsDir(dir)
-    val tag = ScaleJoins.corpusTag(dir, Seq("part"))
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
-    withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val ids = Tables.load(s, dir, "part")
-          .select(col("p_partkey").as("doc_id"))
-        val pairs = StatsOps.qFuzzyJoin(s, dir)
-          .select(col("a_key").as("a"), col("b_key").as("b"))
-        DedupOps.clusterLabels(ids, pairs)
-          .write.mode("overwrite").parquet(root)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(root, ScaleJoins.corpusTag(dir, Seq("part"))) { tmp =>
+      val ids = Tables.load(s, dir, "part")
+        .select(col("p_partkey").as("doc_id"))
+      val pairs = StatsOps.qFuzzyJoin(s, dir)
+        .select(col("a_key").as("a"), col("b_key").as("b"))
+      DedupOps.clusterLabels(ids, pairs)
+        .write.mode("overwrite").parquet(tmp)
     }
     s.read.parquet(root)
   }

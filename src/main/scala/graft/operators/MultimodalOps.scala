@@ -391,17 +391,12 @@ object MultimodalOps {
     * suite closes that last column by recomputing CRC32 from the
     * published bytes driver-side (MultimodalSpec). */
   private[graft] def mediaMetaPublish(s: SparkSession, dir: String): String = {
-    import java.nio.file.{Files, Paths}
     val outDir = mediaMetaDir(dir)
-    val tag = graft.operators.ScaleJoins.corpusTag(dir, Seq("documents"))
-    val tagPath = Paths.get(outDir, "_GRAFT_TAG")
-    Etl.withPathLock(Paths.get(outDir + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        mediaRows(s, dir).toDF()
-          .select("doc_id", "payload", "payload_crc")
-          .write.mode("overwrite").parquet(s"$outDir/payloads")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(outDir,
+        graft.operators.ScaleJoins.corpusTag(dir, Seq("documents"))) { tmp =>
+      mediaRows(s, dir).toDF()
+        .select("doc_id", "payload", "payload_crc")
+        .write.mode("overwrite").parquet(s"$tmp/payloads")
     }
     outDir
   }

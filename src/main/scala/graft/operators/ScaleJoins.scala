@@ -88,38 +88,6 @@ object ScaleJoins {
     Tables.digest64(dir + "|" + sig)
   }
 
-  /** One-time parquet artifact publish under a cross-process lock,
-    * via write-to-temp + ATOMIC RENAME (the SimOps.publishLocked
-    * discipline): a JVM killed mid-write must never leave a partial
-    * directory a later run's exists() check trusts forever — for a
-    * shared summary that would silently skew every query answering
-    * from it, in BOTH engines, invisible to the parity gate.
-    *
-    * With `tag` set the artifact also carries a freshness token
-    * beside it (path + ".tag") and REBUILDS on mismatch — for
-    * deterministic artifacts (IDF tables, summaries) that must track
-    * a regenerated fixture at the same path. The tag is written
-    * LAST: a kill anywhere earlier leaves either the intact old
-    * artifact or none, both rebuild-safe states. Tagless artifacts
-    * are build-once-forever (the frozen-model convention — IVF
-    * centroids — where rebuilding is the bug, not the fix). */
-  private[graft] def publishParquet(path: String,
-      tag: Option[String] = None)(build: => DataFrame): Unit =
-    Etl.withPathLock(java.nio.file.Paths.get(path + ".lock")) {
-      import java.nio.file.{Files, Paths}
-      val tagPath = Paths.get(path + ".tag")
-      val fresh = new java.io.File(path).exists() && tag.forall(t =>
-        Files.exists(tagPath) && Files.readString(tagPath) == t)
-      if (!fresh) {
-        val tmp = path + ".tmp"
-        build.write.mode("overwrite").parquet(tmp)
-        scala.reflect.io.Directory(new java.io.File(path)).deleteRecursively()
-        require(new java.io.File(tmp).renameTo(new java.io.File(path)),
-          s"atomic publish rename failed: $tmp -> $path")
-        tag.foreach(t => Files.writeString(tagPath, t))
-      }
-    }
-
   def qBucketJoin(s: SparkSession, dir: String): DataFrame = {
     // layout is ONE-TIME per corpus: table names carry the corpus
     // fingerprint, and an already-laid-out table is reused — repeated
@@ -164,18 +132,12 @@ object ScaleJoins {
     * invisible in the answer — the oracle is plain SQL over the raw
     * table. */
   def qPartitionPrune(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val layout = partLayoutDir(dir)
-    val tagPath = Paths.get(layout, "_GRAFT_TAG")
-    val tag = corpusTag(dir, Seq("orders"))
-    Etl.withPathLock(Paths.get(layout + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        Tables.load(s, dir, "orders")
-          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"),
-            year(col("o_orderdate")).as("o_year"))
-          .write.mode("overwrite").partitionBy("o_year").parquet(layout)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(layout, corpusTag(dir, Seq("orders"))) { tmp =>
+      Tables.load(s, dir, "orders")
+        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderdate"),
+          year(col("o_orderdate")).as("o_year"))
+        .write.mode("overwrite").partitionBy("o_year").parquet(tmp)
     }
     s.read.parquet(layout)
       .filter(col("o_year") === 1996)
@@ -253,18 +215,12 @@ object ScaleJoins {
     * layout is invisible in the answer: the oracle is plain SQL over
     * the raw table. */
   def qZorderPrune(s: SparkSession, dir: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val layout = zLayoutDir(dir)
-    val tagPath = Paths.get(layout, "_GRAFT_TAG")
-    val tag = corpusTag(dir, Seq("orders"))
-    Etl.withPathLock(Paths.get(layout + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        zorderFrame(Tables.load(s, dir, "orders"))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", 2000)
-          .parquet(layout)
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(layout, corpusTag(dir, Seq("orders"))) { tmp =>
+      zorderFrame(Tables.load(s, dir, "orders"))
+        .write.mode("overwrite")
+        .option("maxRecordsPerFile", 2000)
+        .parquet(tmp)
     }
     s.read.parquet(layout)
       .filter(zQueryFilter)
@@ -350,7 +306,7 @@ object ScaleJoins {
   private[graft] def ensureMv(s: SparkSession, dir: String): String = {
     val tag = corpusTag(dir, Seq("orders"))
     val path = s"/tmp/graft_mv_orders_year_$tag.parquet"
-    publishParquet(path)(mvDefinition(s, dir))
+    graft.Publish.once(path, tag)(mvDefinition(s, dir).write.parquet(_))
     val defPlan = mvDefinition(s, dir).queryExecution.analyzed
     defPlan match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
@@ -406,7 +362,7 @@ object ScaleJoins {
   private[graft] def ensureMonthMv(s: SparkSession, dir: String): String = {
     val tag = corpusTag(dir, Seq("orders"))
     val path = s"/tmp/graft_mv_orders_month_$tag.parquet"
-    publishParquet(path)(mvMonthDefinition(s, dir))
+    graft.Publish.once(path, tag)(mvMonthDefinition(s, dir).write.parquet(_))
     mvMonthDefinition(s, dir).queryExecution.analyzed match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         graft.plans.MvCatalog.register(a, path)
@@ -505,9 +461,10 @@ object ScaleJoins {
   private[graft] def ensureStaleMv(s: SparkSession, dir: String): String = {
     val tag = corpusTag(dir, Seq("orders"))
     val path = s"/tmp/graft_mv_stale_month_$tag.parquet"
-    publishParquet(path)(
+    graft.Publish.once(path, tag)(
       monthPartials(Tables.load(s, dir, "orders")
-        .filter(col("o_orderdate") < lit(mvRefreshCutoff).cast(TimestampType))))
+        .filter(col("o_orderdate") < lit(mvRefreshCutoff).cast(TimestampType)))
+        .write.parquet(_))
     path
   }
 
@@ -574,7 +531,7 @@ object ScaleJoins {
   private[graft] def ensureStarMv(s: SparkSession, dir: String): String = {
     val tag = corpusTag(dir, Seq("orders", "customer"))
     val path = s"/tmp/graft_mv_star_nation_year_$tag.parquet"
-    publishParquet(path)(mvStarDefinition(s, dir))
+    graft.Publish.once(path, tag)(mvStarDefinition(s, dir).write.parquet(_))
     mvStarDefinition(s, dir).queryExecution.analyzed match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         graft.plans.MvCatalog.register(a, path)
@@ -701,7 +658,7 @@ object ScaleJoins {
   private[graft] def ensureDayMv(s: SparkSession, dir: String): String = {
     val tag = corpusTag(dir, Seq("orders"))
     val path = s"/tmp/graft_mv_orders_day_$tag.parquet"
-    publishParquet(path)(mvDayDefinition(s, dir))
+    graft.Publish.once(path, tag)(mvDayDefinition(s, dir).write.parquet(_))
     mvDayDefinition(s, dir).queryExecution.analyzed match {
       case a: org.apache.spark.sql.catalyst.plans.logical.Aggregate =>
         graft.plans.MvCatalog.register(a, path)
@@ -752,8 +709,9 @@ object ScaleJoins {
   private[graft] def ensureStaleStarMv(s: SparkSession, dir: String): String = {
     val tag = corpusTag(dir, Seq("orders", "customer"))
     val path = s"/tmp/graft_mv_stale_star_$tag.parquet"
-    publishParquet(path)(starPartials(s, dir,
-      col("o_orderdate") < lit(mvRefreshCutoff).cast(TimestampType)))
+    graft.Publish.once(path, tag)(starPartials(s, dir,
+      col("o_orderdate") < lit(mvRefreshCutoff).cast(TimestampType))
+      .write.parquet(_))
     path
   }
 
@@ -881,7 +839,7 @@ object ScaleJoins {
     // canonical-text hash: the recommendation is DERIVED from the
     // workload, so unlike the fixed named definitions (ensureMv…), a
     // workload edit can change it within one corpus — without the
-    // definition key, publishParquet would skip on the existing file
+    // definition key, the publish would reuse the existing summary
     // and register the new definition against the STALE summary
     val tag = corpusTag(dir, Seq("orders"))
     // cryptographic digest, not String.hashCode: a 32-bit collision
@@ -895,7 +853,7 @@ object ScaleJoins {
     // publishing the (possibly already-rewritten) frame is fine — its
     // ROWS are the summary either way; the catalog key must come from
     // the raw definition
-    publishParquet(path)(wl(i))
+    graft.Publish.once(path, tag)(wl(i).write.parquet(_))
     graft.plans.MvCatalog.register(defn, path)
     path
   }

@@ -248,46 +248,26 @@ object SimOps {
   def centroidDumpPath(dir: String): String =
     s"/tmp/graft_ivf_centroids_${graft.Tables.sfTag(dir)}.parquet"
 
-  /** The published model is build-once-then-load: if the per-corpus
-    * parquet already exists, the centroids are READ BACK from it and
-    * used for ranking — Lloyd means are not bit-reproducible across
-    * JVMs/partition counts, so a later run (a Bench with different
-    * SPARK_GRAFT_CPUS, a re-Verify) must rank against the SAME doubles
-    * the already-dumped oracle SQL reads, not a fresh refinement that
+  /** The published model is build-once-then-load: the centroids are
+    * published under a CONSTANT tag (a frozen model never rebuilds for
+    * freshness) and always READ BACK from the parquet for ranking —
+    * Lloyd means are not bit-reproducible across JVMs/partition
+    * counts, so a later run (a Bench with different SPARK_GRAFT_CPUS,
+    * a re-Verify) must rank against the SAME doubles the
+    * already-dumped oracle SQL reads, not a fresh refinement that
     * would clobber them. Repeat runs are also write-free, keeping
     * model I/O out of benchmarked queries. */
-  /** Build-or-load under a cross-process FileLock, publishing via
-    * write-to-temp + atomic rename: two JVMs (an overlapping Bench
-    * and Verify) must not both build a non-bit-reproducible model —
-    * one would rank against doubles the other's overwrite replaced
-    * on disk, spuriously failing the oracle — and a JVM killed
-    * mid-write must not leave a partial directory that exists()
-    * trusts forever. */
-  private def publishLocked[A](path: String)(load: => A)(build: => (A, DataFrame)): A =
-    Etl.withPathLock(java.nio.file.Paths.get(path + ".lock")) {
-      if (new java.io.File(path).exists()) load
-      else {
-        val (model, df) = build
-        val tmp = path + ".tmp"
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        require(new java.io.File(tmp).renameTo(new java.io.File(path)),
-          s"atomic publish rename failed: $tmp -> $path")
-        model
-      }
-    }
+  private val frozenModelTag = "frozen"
 
   def publishedCentroids(s: SparkSession, dir: String): Centroids = {
     val path = centroidDumpPath(dir)
-    publishLocked(path) {
-      val rows = s.read.parquet(path).collect().sortBy(_.getInt(0))
-      Centroids(
-        rows.map(_.getInt(0)),
-        rows.map(_.getAs[Seq[Double]]("cv").toArray),
-        rows.map(_.getDouble(2)))
-    } {
-      val cents = cachedCentroids(s, dir)
-      (cents, cents.toDF(s))
-    }
+    graft.Publish.once(path, frozenModelTag)(
+      cachedCentroids(s, dir).toDF(s).coalesce(1).write.parquet(_))
+    val rows = s.read.parquet(path).collect().sortBy(_.getInt(0))
+    Centroids(
+      rows.map(_.getInt(0)),
+      rows.map(_.getAs[Seq[Double]]("cv").toArray),
+      rows.map(_.getDouble(2)))
   }
 
   /** ANN top-k probing only the `nProbe` nearest centroid buckets per
@@ -410,20 +390,19 @@ object SimOps {
     * nrms holds SQUARED norms (the L2-mode contract). */
   def publishedCodebooks(s: SparkSession, dir: String): Array[Centroids] = {
     val path = pqCodebookPath(dir)
-    publishLocked(path) {
-      val rows = s.read.parquet(path).collect()
-      (0 until pqM).toArray.map { m =>
-        val r = rows.filter(_.getAs[Int]("m") == m).sortBy(_.getAs[Int]("c_id"))
-        Centroids(r.map(_.getAs[Int]("c_id")),
-          r.map(_.getAs[Seq[Double]]("cv").toArray),
-          r.map(_.getAs[Double]("cnrm2")))
-      }
-    } {
+    graft.Publish.once(path, frozenModelTag) { tmp =>
       val books = buildCodebooks(corpus(s, dir), pqM, pqK)
       import s.implicits._
-      (books, books.zipWithIndex.toSeq.flatMap { case (b, m) =>
+      books.zipWithIndex.toSeq.flatMap { case (b, m) =>
         b.ids.indices.map(i => (m, b.ids(i), b.vecs(i).toSeq, b.nrms(i)))
-      }.toDF("m", "c_id", "cv", "cnrm2"))
+      }.toDF("m", "c_id", "cv", "cnrm2").coalesce(1).write.parquet(tmp)
+    }
+    val rows = s.read.parquet(path).collect()
+    (0 until pqM).toArray.map { m =>
+      val r = rows.filter(_.getAs[Int]("m") == m).sortBy(_.getAs[Int]("c_id"))
+      Centroids(r.map(_.getAs[Int]("c_id")),
+        r.map(_.getAs[Seq[Double]]("cv").toArray),
+        r.map(_.getAs[Double]("cnrm2")))
     }
   }
 

@@ -655,46 +655,40 @@ object StreamOps {
     StructType(cdcLogSchema.fields :+ StructField("change_ts", TimestampType))
 
   private def writeCdcLog(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val root = cdcLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     // layout suffix: the r13 change_ts column must force a republish
     // of logs published by older binaries (content check only — the
     // DIR name stays keyed on corpus identity alone)
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer")) +
       "|layout=ts1"
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val base = graft.Tables.load(s, sfDir, "customer")
-        def stamp(df: DataFrame, op: String, v: Int): DataFrame =
-          df.withColumn("op", lit(op)).withColumn("version", lit(v))
-            .withColumn("change_ts",
-              expr(s"timestamp_micros(${cdcT0Micros}L + version * 3600000000L)"))
-        val b1 = stamp(base.filter(col("c_custkey") % 10 === 1)
-          .withColumn("c_acctbal", col("c_acctbal") + 100.0), "U", 1)
-        // deletes ride with their last payload (Debezium 'before'
-        // image); the apply only reads their key + version
-        val b2 = stamp(base.filter(col("c_custkey") % 10 === 3), "D", 2)
-        val shift = base.agg(max(col("c_custkey")).as("key_shift"))
-        val b3 = stamp(base.filter(col("c_custkey") % 10 === 7)
-          .crossJoin(broadcast(shift))
-          .withColumn("c_custkey", col("c_custkey") + col("key_shift"))
-          .drop("key_shift"), "I", 3)
-        // sequential writes give the file source its mtime order. For
-        // the MERGE consumers (stream_cdc_apply, stream_scd2,
-        // stream_dim_vacuum) that order is a convenience — the merge
-        // is version-aware and converges under any delivery order —
-        // but the SNAPSHOT keys (stream_dim_asof, stream_dim_asof_ts)
-        // DEPEND on wave v landing as batchId v-1: their as-of bounds
-        // index batch positions. An mtime tie reordering the waves
-        // would silently desynchronize every snapshot from the
-        // progressive oracle, so those keys' foreachBatch REQUIREs
-        // version == batchId+1 and fails fast instead.
-        b1.coalesce(1).write.mode("overwrite").parquet(s"$root/b1")
-        b2.coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
-        b3.coalesce(1).write.mode("overwrite").parquet(s"$root/b3")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(cdcLogDir(sfDir), tag) { tmp =>
+      val base = graft.Tables.load(s, sfDir, "customer")
+      def stamp(df: DataFrame, op: String, v: Int): DataFrame =
+        df.withColumn("op", lit(op)).withColumn("version", lit(v))
+          .withColumn("change_ts",
+            expr(s"timestamp_micros(${cdcT0Micros}L + version * 3600000000L)"))
+      val b1 = stamp(base.filter(col("c_custkey") % 10 === 1)
+        .withColumn("c_acctbal", col("c_acctbal") + 100.0), "U", 1)
+      // deletes ride with their last payload (Debezium 'before'
+      // image); the apply only reads their key + version
+      val b2 = stamp(base.filter(col("c_custkey") % 10 === 3), "D", 2)
+      val shift = base.agg(max(col("c_custkey")).as("key_shift"))
+      val b3 = stamp(base.filter(col("c_custkey") % 10 === 7)
+        .crossJoin(broadcast(shift))
+        .withColumn("c_custkey", col("c_custkey") + col("key_shift"))
+        .drop("key_shift"), "I", 3)
+      // sequential writes give the file source its mtime order. For
+      // the MERGE consumers (stream_cdc_apply, stream_scd2,
+      // stream_dim_vacuum) that order is a convenience — the merge
+      // is version-aware and converges under any delivery order —
+      // but the SNAPSHOT keys (stream_dim_asof, stream_dim_asof_ts)
+      // DEPEND on wave v landing as batchId v-1: their as-of bounds
+      // index batch positions. An mtime tie reordering the waves
+      // would silently desynchronize every snapshot from the
+      // progressive oracle, so those keys' foreachBatch REQUIREs
+      // version == batchId+1 and fails fast instead.
+      b1.coalesce(1).write.mode("overwrite").parquet(s"$tmp/b1")
+      b2.coalesce(1).write.mode("overwrite").parquet(s"$tmp/b2")
+      b3.coalesce(1).write.mode("overwrite").parquet(s"$tmp/b3")
     }
   }
 
@@ -749,29 +743,23 @@ object StreamOps {
     StructField("c_mktsegment", StringType)))
 
   private def writeScd2Log(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val root = scd2LogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("customer"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val base = graft.Tables.load(s, sfDir, "customer")
-          .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
-        val w1 = base.filter(col("c_custkey") % 10 === 1)
-          .withColumn("c_acctbal", col("c_acctbal") + 100.0)
-          .withColumn("ver", lit(1))
-        val w2 = base.filter(col("c_custkey") % 5 === 1)
-          .withColumn("c_acctbal", col("c_acctbal") +
-            when(col("c_custkey") % 10 === 1, 350.0).otherwise(250.0))
-          .withColumn("c_mktsegment", lit("MACHINERY"))
-          .withColumn("ver", lit(2))
-        val cols = Seq("c_custkey", "ver", "c_acctbal", "c_mktsegment")
-        w1.select(cols.map(col): _*)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/b1")
-        w2.select(cols.map(col): _*)
-          .coalesce(1).write.mode("overwrite").parquet(s"$root/b2")
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(scd2LogDir(sfDir), tag) { tmp =>
+      val base = graft.Tables.load(s, sfDir, "customer")
+        .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))
+      val w1 = base.filter(col("c_custkey") % 10 === 1)
+        .withColumn("c_acctbal", col("c_acctbal") + 100.0)
+        .withColumn("ver", lit(1))
+      val w2 = base.filter(col("c_custkey") % 5 === 1)
+        .withColumn("c_acctbal", col("c_acctbal") +
+          when(col("c_custkey") % 10 === 1, 350.0).otherwise(250.0))
+        .withColumn("c_mktsegment", lit("MACHINERY"))
+        .withColumn("ver", lit(2))
+      val cols = Seq("c_custkey", "ver", "c_acctbal", "c_mktsegment")
+      w1.select(cols.map(col): _*)
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b1")
+      w2.select(cols.map(col): _*)
+        .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b2")
     }
   }
 
@@ -1589,24 +1577,19 @@ object StreamOps {
 
   private def writeLateLog(s: SparkSession, sfDir: String): Unit = {
     import java.nio.file.{Files, Paths}
-    val root = lateLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("events"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val ev = graft.Tables.load(s, sfDir, "events")
-          .select(col("event_id"), col("event_type"), col("ts"))
-        (0 until 3).foreach { b =>
-          val dir = s"$root/b${b + 1}"
-          ev.filter(col("event_id") % 3 === b)
-            .coalesce(1).write.mode("overwrite").parquet(dir)
-          // pin the file source's processing order explicitly
-          val t = java.nio.file.attribute.FileTime.fromMillis(
-            1600000000000L + b * 60000L)
-          Files.list(Paths.get(dir)).forEach(p =>
-            Files.setLastModifiedTime(p, t))
-        }
-        Files.writeString(tagPath, tag)
+    graft.Publish.once(lateLogDir(sfDir), tag) { tmp =>
+      val ev = graft.Tables.load(s, sfDir, "events")
+        .select(col("event_id"), col("event_type"), col("ts"))
+      (0 until 3).foreach { b =>
+        val dir = s"$tmp/b${b + 1}"
+        ev.filter(col("event_id") % 3 === b)
+          .coalesce(1).write.mode("overwrite").parquet(dir)
+        // pin the file source's processing order explicitly
+        val t = java.nio.file.attribute.FileTime.fromMillis(
+          1600000000000L + b * 60000L)
+        Files.list(Paths.get(dir)).forEach(p =>
+          Files.setLastModifiedTime(p, t))
       }
     }
   }
@@ -1882,27 +1865,21 @@ object StreamOps {
     StructField("o_totalprice", DoubleType)))
 
   private def writeMvLog(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val root = mvLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val delta = graft.Tables.load(s, sfDir, "orders")
-          .filter(col("o_orderdate") >=
-            lit(graft.operators.ScaleJoins.mvRefreshCutoff).cast(TimestampType))
-          .withColumn("wave",
-            when(col("o_orderdate") < lit("1999-06-01").cast(TimestampType), 0)
-              .when(col("o_orderdate") < lit("2000-06-01").cast(TimestampType), 1)
-              .otherwise(2))
-          .select("wave", "o_orderdate", "o_totalprice")
-        delta.cache()
-        try (0 to 2).foreach { w =>
-          delta.filter(col("wave") === w)
-            .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
-        } finally delta.unpersist()
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(mvLogDir(sfDir), tag) { tmp =>
+      val delta = graft.Tables.load(s, sfDir, "orders")
+        .filter(col("o_orderdate") >=
+          lit(graft.operators.ScaleJoins.mvRefreshCutoff).cast(TimestampType))
+        .withColumn("wave",
+          when(col("o_orderdate") < lit("1999-06-01").cast(TimestampType), 0)
+            .when(col("o_orderdate") < lit("2000-06-01").cast(TimestampType), 1)
+            .otherwise(2))
+        .select("wave", "o_orderdate", "o_totalprice")
+      delta.cache()
+      try (0 to 2).foreach { w =>
+        delta.filter(col("wave") === w)
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b$w")
+      } finally delta.unpersist()
     }
   }
 
@@ -2020,26 +1997,20 @@ object StreamOps {
     StructField("o_totalprice", DoubleType)))
 
   private def writeRetractLog(s: SparkSession, sfDir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    val root = retractLogDir(sfDir)
-    val tagPath = Paths.get(root, "_GRAFT_TAG")
     val tag = graft.operators.ScaleJoins.corpusTag(sfDir, Seq("orders"))
-    graft.operators.Etl.withPathLock(Paths.get(root + ".lock")) {
-      if (!Files.exists(tagPath) || Files.readString(tagPath) != tag) {
-        val dels = graft.Tables.load(s, sfDir, "orders")
-          .filter(col("o_orderkey") % 101 === 0)
-          .withColumn("wave",
-            when(col("o_orderdate") < lit("1997-01-01").cast(TimestampType), 0)
-              .when(col("o_orderdate") < lit("1999-01-01").cast(TimestampType), 1)
-              .otherwise(2))
-          .select("wave", "o_orderkey", "o_orderdate", "o_totalprice")
-        dels.cache()
-        try (0 to 2).foreach { w =>
-          dels.filter(col("wave") === w)
-            .coalesce(1).write.mode("overwrite").parquet(s"$root/b$w")
-        } finally dels.unpersist()
-        Files.writeString(tagPath, tag)
-      }
+    graft.Publish.once(retractLogDir(sfDir), tag) { tmp =>
+      val dels = graft.Tables.load(s, sfDir, "orders")
+        .filter(col("o_orderkey") % 101 === 0)
+        .withColumn("wave",
+          when(col("o_orderdate") < lit("1997-01-01").cast(TimestampType), 0)
+            .when(col("o_orderdate") < lit("1999-01-01").cast(TimestampType), 1)
+            .otherwise(2))
+        .select("wave", "o_orderkey", "o_orderdate", "o_totalprice")
+      dels.cache()
+      try (0 to 2).foreach { w =>
+        dels.filter(col("wave") === w)
+          .coalesce(1).write.mode("overwrite").parquet(s"$tmp/b$w")
+      } finally dels.unpersist()
     }
   }
 

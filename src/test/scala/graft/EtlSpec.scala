@@ -684,6 +684,13 @@ class EtlSpec extends AnyFunSuite {
     val sel = Etl.manifestSelectedFiles(spark, root)
     assert(sel.nonEmpty && sel.size < allFiles,
       s"manifest did not prune: ${sel.size} of $allFiles files selected")
+    // the manifest stores names relative to the layout, so every
+    // selected file resolves under the PUBLISHED root (the build ran
+    // under a temp root that was renamed into place)
+    sel.foreach { f =>
+      assert(f.startsWith(s"$root/data/") && new java.io.File(f).isFile,
+        s"selected file not under the published root: $f")
+    }
     // file-level triage loses no rows: the selected files hold every
     // predicate row the full table holds
     val pred = col("o_orderkey").between(Etl.manifestLo, Etl.manifestHi)

@@ -14,6 +14,7 @@
 set -e
 cd "$(dirname "$0")/.."
 P="${1:-/tmp/gate}"
+CPUS="$(nproc)"
 
 echo "== suite =="
 sbt -batch test > "$P.suite.log" 2>&1 || { grep -E "Tests:|\*\*\*" "$P.suite.log" | tail -5; exit 1; }
@@ -21,7 +22,7 @@ grep -E "Tests:" "$P.suite.log" | tail -1
 
 for sf in 0.001 0.01 0.1; do
   echo "== sf$sf =="
-  SPARK_GRAFT_CPUS=24 sbt -batch "runMain graft.Verify /root/testdata/sf$sf $P.out_$sf" \
+  SPARK_GRAFT_CPUS="$CPUS" sbt -batch "runMain graft.Verify /root/testdata/sf$sf $P.out_$sf" \
     > "$P.verify_$sf.log" 2>&1 \
     || { echo "VERIFY sf$sf crashed:"; tail -20 "$P.verify_$sf.log"; exit 1; }
   if grep -q "\[verify\].*failed" "$P.verify_$sf.log"; then
@@ -36,7 +37,7 @@ echo "== sf1 (GenScale) =="
 sbt -batch "runMain graft.GenScale /root/testdata/sf0.1 /tmp/graft_sf1 10" \
   > "$P.gen.log" 2>&1 \
   || { echo "GENSCALE crashed:"; tail -20 "$P.gen.log"; exit 1; }
-SPARK_GRAFT_CPUS=28 sbt -batch "runMain graft.Verify /tmp/graft_sf1 $P.out_1" \
+SPARK_GRAFT_CPUS="$CPUS" sbt -batch "runMain graft.Verify /tmp/graft_sf1 $P.out_1" \
   > "$P.verify_1.log" 2>&1 \
   || { echo "VERIFY sf1 crashed:"; tail -20 "$P.verify_1.log"; exit 1; }
 if grep -q "\[verify\].*failed" "$P.verify_1.log"; then
