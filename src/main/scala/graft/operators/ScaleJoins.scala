@@ -95,12 +95,17 @@ object ScaleJoins {
     val tag = corpusTag(dir, Seq("lineitem", "orders"))
     val liTab = s"graft_li_bucketed_$tag"
     val ordTab = s"graft_ord_bucketed_$tag"
-    if (!s.catalog.tableExists(liTab))
-      Bucketing.writeBucketed(Tables.load(s, dir, "lineitem")
-        .select("l_orderkey", "l_quantity"), liTab, "l_orderkey", 8)
-    if (!s.catalog.tableExists(ordTab))
-      Bucketing.writeBucketed(Tables.load(s, dir, "orders")
-        .select("o_orderkey", "o_orderstatus"), ordTab, "o_orderkey", 8)
+    // check-then-build under one lock: writeBucketed DROPs and
+    // overwrites, so two callers racing past tableExists would delete
+    // each other's files mid-write
+    graft.Publish.locked(s"/tmp/graft_bucket_$tag") {
+      if (!s.catalog.tableExists(liTab))
+        Bucketing.writeBucketed(Tables.load(s, dir, "lineitem")
+          .select("l_orderkey", "l_quantity"), liTab, "l_orderkey", 8)
+      if (!s.catalog.tableExists(ordTab))
+        Bucketing.writeBucketed(Tables.load(s, dir, "orders")
+          .select("o_orderkey", "o_orderstatus"), ordTab, "o_orderkey", 8)
+    }
     Bucketing.readTable(s, liTab).hint("merge")
       .join(Bucketing.readTable(s, ordTab),
         col("l_orderkey") === col("o_orderkey"))

@@ -18,7 +18,11 @@ case class ColumnChange(
     reference: Option[Reference] = None,
     // per-column FK ON DELETE override (reference: col_attrs
     // ['on_delete'], PsqlParser.py:400 — e.g. "CASCADE", "SET NULL")
-    onDelete: Option[String] = None)
+    onDelete: Option[String] = None,
+    // the declared MySQL type ("tinyint(1)", "date", "time"), which a
+    // parquet source does not carry: it picks the conditional type
+    // rules and the raw-dump value conversions
+    fullType: Option[String] = None)
 
 case class JoinRule(table: String, col: String, colRef: String)
 
@@ -127,7 +131,8 @@ object SchemaRules {
               dataType = cc.dataType.getOrElse(c.dataType),
               default = cc.default.orElse(c.default),
               reference = cc.reference.orElse(c.reference),
-              onDelete = cc.onDelete.orElse(c.onDelete))
+              onDelete = cc.onDelete.orElse(c.onDelete),
+              fullType = cc.fullType.getOrElse(c.fullType))
         }
       }))
   }

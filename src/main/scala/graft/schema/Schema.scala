@@ -92,7 +92,9 @@ object Introspect {
     case s if s.startsWith("decimal(") =>
       val Array(p, sc) = s.stripPrefix("decimal(").stripSuffix(")").split(",")
       DecimalType(p.trim.toInt, sc.trim.toInt)
-    case "varchar" | "char" | "text" | "mediumtext" | "longtext" | "set" | "enum" => StringType
+    // MySQL TIME spans past 24h ('838:59:59'): kept as its text
+    case "varchar" | "char" | "text" | "mediumtext" | "longtext" | "set" | "enum" |
+        "time" => StringType
     case "blob" | "longblob" | "bytea" => BinaryType
     case "boolean" => BooleanType
     case "date" => DateType

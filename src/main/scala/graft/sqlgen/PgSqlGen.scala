@@ -232,7 +232,7 @@ object PgSqlGen {
       case _ => ""
     }
 
-  private def js(s: String): String = "\"" + s.flatMap {
+  private[graft] def js(s: String): String = "\"" + s.flatMap {
     case '"' => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"

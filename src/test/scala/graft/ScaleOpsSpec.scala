@@ -298,6 +298,24 @@ class ScaleOpsSpec extends AnyFunSuite {
     assert(r1.sameElements(r2))
   }
 
+  test("two threads laying out one corpus's bucket tables agree") {
+    import graft.operators.ScaleJoins
+    import java.nio.file.{Files, Paths}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val tmp = Files.createTempDirectory("graft-bucket-race").toString
+    for (t <- Seq("lineitem", "orders"))
+      Files.copy(Paths.get(s"$sf/$t.parquet"), Paths.get(s"$tmp/$t.parquet"))
+    // both threads find the tables missing; under the layout lock the
+    // second waits and reuses, instead of dropping the first's files
+    // mid-write
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val runs = Seq.fill(2)(Future(ScaleJoins.qBucketJoin(spark, tmp).collect()))
+    val Seq(a, b) = Await.result(Future.sequence(runs), 5.minutes)
+    val plain = ScaleJoins.qBucketJoin(spark, sf).collect()
+    assert(a.nonEmpty && a.sameElements(b) && a.sameElements(plain))
+  }
+
   test("q_zorder_prune: layout prunes the scan on BOTH filter dimensions") {
     import graft.operators.ScaleJoins
     import org.apache.spark.sql.execution.FileSourceScanExec
